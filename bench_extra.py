@@ -1,9 +1,9 @@
 """Per-query isolation profiler for the optimization rounds (guide §1).
 
 NOT part of the frozen driver contract (bench.py is frozen); this harness
-exists to (a) time individual queries with the exact bench methodology,
-(b) dump .explain("formatted") plans to plans/<tag>/<query>_<suffix>.txt,
-and (c) count Spark jobs per query — so plan-shape claims in
+exists to (a) time individual queries with the exact bench methodology
+and (b) dump .explain("formatted") plans to
+plans/<tag>/<query>_<suffix>.txt — so plan-shape claims in
 OPTIMIZATION_r*.md are backed by committed artifacts.
 
 Usage:
@@ -63,12 +63,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     out: dict[str, dict] = {}
     for name in names:
         sc.setJobDescription(f"profile:{name}")
         times = []
-        jobs0 = len(tracker.getJobIdsForGroup(None) or [])
         for rep in range(reps):
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)

@@ -218,32 +218,6 @@ def md5i(col, nhex: int = 14):
     return F.conv(F.substring(F.md5(col), 1, nhex), 16, 10).cast("long")
 
 
-def minhash_signatures(
-    documents: DataFrame, num_hashes: int = 32, n: int = 3, shingles: DataFrame | None = None
-) -> DataFrame:
-    """MinHash signatures: h_i(x) = (a_i*x + b_i) mod P over md5i shingle
-    ints; signature = array of per-i minima. Two-stage agg, fully built-in:
-    explode shingles → per-doc min of each hash. The per-hash mins compute
-    map-side; shuffle carries |docs| x num_hashes longs only.
-
-    NOTE: a_i*x can exceed 2^63 (x is 56-bit) — reduce x mod 2^31 first so
-    every product stays in long range; collision risk at 31 bits is
-    irrelevant for min-hashing.
-    """
-    # deterministic (a_i, b_i) parameters — fixed literals, odd multipliers
-    params = [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
-    sh = shingles if shingles is not None else word_shingle_keys(documents, n)
-    # a pre-hashed (long) index feeds x directly; a string index hashes here
-    key = F.col("shingle")
-    x = (key if dict(sh.dtypes)["shingle"] == "bigint" else md5i(key)) % F.lit(1 << 31)
-    mins = [
-        F.min((F.lit(a % _P) * x + F.lit(b % _P)) % F.lit(_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     num_hashes: int = 32,
@@ -273,6 +247,9 @@ def minhash_lsh_pairs(
     # and re-analyzed the growing 32-aggregate tree at every transformation,
     # ~3.5 s of DRIVER time per invocation at any scale (measured with
     # cProfile; identical analyzed plans either way).
+    # h_i(x) = (a_i*x + b_i) mod P with fixed odd-multiplier literals; x is
+    # the 56-bit md5i shingle key reduced mod 2^31 so a_i*x stays in long
+    # range (31-bit collisions are irrelevant for min-hashing)
     params = [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
     if dict(sh0.dtypes)["shingle"] == "bigint":
         x_sql = f"(shingle % {1 << 31})"

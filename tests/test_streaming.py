@@ -407,60 +407,6 @@ def test_tick_keys_are_salted(spark):
     assert max(r["count"] for r in counts) <= 2 * n / TICK_SALT
 
 
-def test_resolver_tws_matches_applyinpandas(spark, tmp_path):
-    """The transformWithState resolver (north-rule wording) produces the
-    same resolved set as the applyInPandasWithState one, including the
-    unresolved timer flush — run on RocksDB (the API's required provider).
-
-    transformWithState's Python state protocol rides on protobuf, which is
-    not baked into this sandbox (and installs are disallowed) — the module
-    is complete and this test runs wherever protobuf exists."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from maxx_spark.extract import extract_code_units
-    from maxx_spark.streaming.resolver_tws import resolve_bases_tws
-
-    t0 = dt.datetime(2024, 6, 2, 9, 0, 0)
-    batches = [
-        [("https://h7/x/Leaf.m", t0 + dt.timedelta(seconds=2), None, "classdef Leaf < Mid\nend", "matlab")],
-        [("https://h7/x/Mid.m", t0, None, "classdef Mid < Base\nend", "matlab"),
-         ("https://h7/x/Orphan.m", t0 + dt.timedelta(seconds=1), None, "classdef Orphan < Nowhere\nend", "matlab")],
-        [("https://h7/x/Base.m", t0 + dt.timedelta(seconds=3), None, "classdef Base\nend", "matlab")],
-        [("https://h7/x/hb.m", t0 + dt.timedelta(hours=1), None, "x=1;", "matlab")],
-        [("https://h7/x/hb2.m", t0 + dt.timedelta(hours=2), None, "x=2;", "matlab")],
-    ]
-    src = str(tmp_path / "twssrc")
-    import time as _time
-
-    for off, rows in enumerate(batches):
-        before = set(glob.glob(f"{src}/*.parquet"))
-        spark.createDataFrame(rows, PAGES).coalesce(1).write.mode("append").parquet(src)
-        now = _time.time()
-        for f in set(glob.glob(f"{src}/*.parquet")) - before:
-            os.utime(f, (now + off * 60, now + off * 60))
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        pages = spark.readStream.schema(PAGES).option("maxFilesPerTrigger", "1").parquet(src)
-        resolved = resolve_bases_tws(extract_code_units(pages))
-        run_to_memory(resolved, "tws_t", str(tmp_path / "ck_tws"))
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql("select * from tws_t").collect()
-    got = {(r["identifier"], r["derived"], r["resolved"]) for r in rows}
-    assert ("Base", "Mid", True) in got      # need waited for def
-    assert ("Mid", "Leaf", True) in got      # def waited for need
-    assert ("Nowhere", "Orphan", False) in got  # timer flush, unresolved
-
-
 def test_extraction_query_glob_root(spark, tmp_path):
     """P1 streaming form: with a glob_root, pages outside the root's
     membership (top-level private, Contents.m) never reach the extractor."""
@@ -488,8 +434,7 @@ def _horizon_stress(spark, tmp_path, resolver_fn, sink_name):
     eviction must hold live state at the watermark horizon (~the last 3
     epochs), never the corpus total — the README's "state tracks the live
     crawl horizon, not the corpus" claim, measured on the engine's own
-    state-store metrics. Run against both stateful backends (applyInPandas
-    WithState and the transformWithState twin)."""
+    state-store metrics."""
     import time as _time
 
     src = str(tmp_path / "horizon_src")
@@ -543,32 +488,6 @@ def _horizon_stress(spark, tmp_path, resolver_fn, sink_name):
 
 def test_resolver_state_tracks_horizon_not_corpus(spark, tmp_path):
     _horizon_stress(spark, tmp_path, resolve_bases_stream, "horizon_t")
-
-
-def test_resolver_tws_state_tracks_horizon_not_corpus(spark, tmp_path):
-    """VERDICT r5 item 8: the same horizon bound on the transformWithState
-    twin. Activation: runs wherever ``google.protobuf`` is importable (the
-    TWS Python state protocol's wire format) — absent in this sandbox, so
-    it env-skips here; any CI image with protobuf runs it automatically,
-    no opt-in flag needed. Requires the RocksDB state-store provider
-    (transformWithState's only supported backend)."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from maxx_spark.streaming.resolver_tws import resolve_bases_tws
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _horizon_stress(spark, tmp_path, resolve_bases_tws, "horizon_tws_t")
-    finally:
-        if old:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_streaming_funnel_matches_batch(spark, tmp_path):
