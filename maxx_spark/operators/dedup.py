@@ -109,7 +109,6 @@ def _capped_shingles(
     n: int,
     max_df: int,
     index: DataFrame | None = None,
-    df_mode: str = "join",
 ) -> DataFrame:
     """Shingle index with stop-shingle removal: shingles occurring in more
     than ``max_df`` documents are dropped *before* the self-join. A shingle
@@ -117,40 +116,15 @@ def _capped_shingles(
     shingle at web scale turns the join quadratic; with it the per-shingle
     fanout is bounded by max_df^2. Jaccard is then computed on the filtered
     shingle universe (applied identically in the SQL oracle)."""
-    from pyspark.sql import Window
-
-    # df via a count-window over shingle instead of groupBy+join-back:
-    # ONE exchange on shingle (vs agg shuffle + join shuffle), and the
-    # filtered index emerges ALREADY partitioned on shingle — the exact
-    # partitioning the downstream self-join keys on, so Catalyst reuses
-    # the exchange instead of re-shuffling both sides.
-    # Caveat (measured trade, kept deliberately): a pathologically viral
-    # shingle lands in ONE window partition before the cap discards it,
-    # and AQE cannot split window partitions (it can split skewed joins).
-    # df_mode='join' IS that escape hatch (r5 advisory #3, closed r6): the
-    # df comes from a map-side-combined groupBy (the viral shingle is a
-    # per-partition partial, never one task's row pile), surviving-shingle
-    # keys semi-join back, the join output is also shingle-partitioned so
-    # the downstream self-join exchange reuse survives, and every skewed
-    # stage is AQE-splittable. Byte-equal outputs (test_dedup_df_modes).
-    # DEFAULT = 'join' since r6: the r3 A/B that favored the window
-    # (7.5→5.0 s) predates the 8-byte md5i keys; re-measured on the keyed
-    # index (two interleaved sf0.1 sessions, 7 reps each) the two are a
-    # wash inside box noise (medians: window 6.3 s vs join 5.4 s, ranges
-    # fully overlapping) — so the scale-safe AQE-splittable form wins by
-    # default and 'window' stays for single-box squeezing.
+    # df via a map-side-combined groupBy (a viral shingle reaches its
+    # reducer as one partial row per map task, never one task's row pile),
+    # semi-joined back: the join output is shingle-partitioned, so the
+    # downstream self-join reuses the exchange, and every skewed stage is
+    # AQE-splittable (a count-window over shingle would not be).
     idx = index if index is not None else word_shingle_keys(documents, n)
-    if df_mode == "join":
-        dfc = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        return idx.join(
-            dfc.where(F.col("__df") <= max_df).select("shingle"), "shingle"
-        )
-    w = Window.partitionBy("shingle")
-    return (
-        idx
-        .withColumn("__df", F.count(F.lit(1)).over(w))
-        .where(F.col("__df") <= max_df)
-        .drop("__df")
+    dfc = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+    return idx.join(
+        dfc.where(F.col("__df") <= max_df).select("shingle"), "shingle"
     )
 
 
@@ -160,7 +134,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.05,
     max_df: int = 64,
     index: DataFrame | None = None,
-    df_mode: str = "join",
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs via inverted index self-join (on the
     stop-shingle-filtered universe, see _capped_shingles).
@@ -171,18 +144,12 @@ def ngram_jaccard_pairs(
     passes it to each; the caller owns persistence and must build it from
     the SAME documents at the SAME n. Default (None) builds it inline.
 
-    |A∩B| from the shingle join; |A|,|B| from per-doc counts, attached via
-    SHUFFLE joins keyed by doc id — `sizes` has one row per document, and
-    a broadcast must fit absolutely (not merely "relative to the exploded
-    index"): at 10^9+ docs a broadcast(sizes) is a guaranteed driver OOM,
-    while the shuffle join moves only (doc_a, doc_b, ints) pairs one extra
-    exchange. (AQE may still auto-broadcast at small SF — fine: that
-    decision is size-based at runtime, not a hint forcing it at any
-    scale.) Emits (doc_a, doc_b, inter_size, union_size) with
+    |A∩B| from the shingle join; |A|,|B| and the threshold filter in
+    _exact_jaccard. Emits (doc_a, doc_b, inter_size, union_size) with
     doc_a < doc_b; the Jaccard ratio is re-derivable exactly from the two
     integers, so no float leaves the operator.
 
-    r7: the RAW index is pinned before the df cap — df_mode='join' builds
+    r7: the RAW index is pinned before the df cap — _capped_shingles builds
     the capped index as idx ⨝ (df rollup of idx), i.e. TWO passes over the
     raw index; without the pin both passes re-scan and re-hash the corpus
     (the single heaviest map work in the operator). Pinning also makes the
@@ -191,8 +158,7 @@ def ngram_jaccard_pairs(
     once even without an explicit ``index=``.
     """
     sh0 = index if index is not None else word_shingle_keys(documents, n).cache()
-    sh = _capped_shingles(documents, n, max_df, index=sh0, df_mode=df_mode).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = _capped_shingles(documents, n, max_df, index=sh0).cache()
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -201,7 +167,24 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter_size"))
     )
-    out = (
+    return _exact_jaccard(sh, inter, threshold)
+
+
+def _exact_jaccard(sh: DataFrame, inter: DataFrame, threshold: float) -> DataFrame:
+    """Verify tail shared by both dedup pair operators: attach per-doc
+    sizes from the capped index ``sh`` to the (doc_a, doc_b, inter_size)
+    intersections, keep pairs with |A∩B| / |A∪B| >= ``threshold`` →
+    (doc_a, doc_b, inter_size, union_size) ordered by (doc_a, doc_b).
+
+    Sizes attach via SHUFFLE joins keyed by doc id — ``sizes`` has one row
+    per document, and a broadcast must fit absolutely (not merely "relative
+    to the exploded index"): at 10^9+ docs a broadcast(sizes) is a
+    guaranteed driver OOM, while the shuffle join moves only (doc_a, doc_b,
+    ints) pairs one extra exchange. (AQE may still auto-broadcast at small
+    SF — that decision is size-based at runtime, not a hint forcing it at
+    any scale.)"""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
         .withColumn("union_size", F.col("n_a") + F.col("n_b") - F.col("inter_size"))
@@ -209,7 +192,6 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b", "inter_size", "union_size")
         .orderBy("doc_a", "doc_b")
     )
-    return out
 
 
 def md5i(col, nhex: int = 14):
@@ -234,8 +216,9 @@ def minhash_lsh_pairs(
     Verification joins back to the shingle index only for candidate pairs —
     at scale this is the difference between O(candidates) and O(n^2).
 
-    ``index``: optional pre-built shingle-key index shared across dedup
-    consumers (see ngram_jaccard_pairs) — caller owns persistence.
+    ``index``: optional pre-built ``word_shingle_keys(documents, n)`` table
+    shared across dedup consumers (see ngram_jaccard_pairs) — caller owns
+    persistence.
     """
     r = num_hashes // bands
     # shared: signatures + verify (cache only the inline build; a passed
@@ -251,10 +234,7 @@ def minhash_lsh_pairs(
     # the 56-bit md5i shingle key reduced mod 2^31 so a_i*x stays in long
     # range (31-bit collisions are irrelevant for min-hashing)
     params = [((2 * i + 1) * 1_000_003 % _P, (i * i + i + 1) * 998_244_353 % _P) for i in range(num_hashes)]
-    if dict(sh0.dtypes)["shingle"] == "bigint":
-        x_sql = f"(shingle % {1 << 31})"
-    else:
-        x_sql = f"(cast(conv(substring(md5(shingle), 1, 14), 16, 10) as bigint) % {1 << 31})"
+    x_sql = f"(shingle % {1 << 31})"
     mins = [
         F.expr(f"min(({a} * {x_sql} + {b}) % {_P})").alias(f"h{i}")
         for i, (a, b) in enumerate(params)
@@ -317,7 +297,6 @@ def minhash_lsh_pairs(
         .join(cand_ids, "doc_id")
         .cache()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -325,25 +304,13 @@ def minhash_lsh_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter_size"))
     )
-    return (
-        # per-doc sizes attach via shuffle joins, NOT broadcast — one row
-        # per document can never be assumed to fit in driver memory (see
-        # ngram_jaccard_pairs docstring; AQE may still choose broadcast at
-        # runtime when actually small)
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("union_size", F.col("n_a") + F.col("n_b") - F.col("inter_size"))
-        .where(F.col("inter_size") * F.lit(1.0) / F.col("union_size") >= threshold)
-        .select("doc_a", "doc_b", "inter_size", "union_size")
-        .orderBy("doc_a", "doc_b")
-        # r7: pin the verified pair list — the near-dup pair set is the
-        # artifact every downstream consumer (clustering, span stats,
-        # reporting) reads repeatedly, and it is orders of magnitude
-        # smaller than the corpus index that produced it. In a session
-        # running q13 then q44 the clustering consumes these cached pairs
-        # instead of re-deriving signatures + candidates from scratch.
-        .cache()
-    )
+    # r7: pin the verified pair list — the near-dup pair set is the
+    # artifact every downstream consumer (clustering, span stats,
+    # reporting) reads repeatedly, and it is orders of magnitude
+    # smaller than the corpus index that produced it. In a session
+    # running q13 then q44 the clustering consumes these cached pairs
+    # instead of re-deriving signatures + candidates from scratch.
+    return _exact_jaccard(sh, inter, threshold).cache()
 
 
 def dedup_clusters(
@@ -371,11 +338,9 @@ def dedup_clusters(
     loop localCheckpoints every round to cut the lineage (same pattern as
     the MRO ancestor closure, codeunits.py) and exits on a converged
     aggregate (sum of labels stable — monotone non-increasing, so equality
-    ⇔ fixpoint; no per-round collect of data rows). At web scale the
-    well-known refinement is alternating large-star/small-star (Kiveris et
-    al. 2014), which bounds rounds to O(log^2 n) on adversarial graphs —
-    the per-round plan here is the same join+agg shape, so the swap is
-    local; for dedup graphs plain propagation converges in fewer rounds.
+    ⇔ fixpoint; no per-round collect of data rows). A high-diameter
+    (adversarial) graph escalates to large-star/small-star — see
+    connected_components.
     """
     pairs = minhash_lsh_pairs(
         documents, num_hashes=num_hashes, bands=bands, n=n,
@@ -388,7 +353,6 @@ def connected_components(
     pairs: DataFrame,
     max_iters: int = 20,
     local_threshold: int = 100_000,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over an undirected (doc_a, doc_b) pair list →
     (doc_id, cluster_id, cluster_size), cluster_id = component min. See
@@ -400,32 +364,25 @@ def connected_components(
     (localCheckpoint — also cuts the lineage to the expensive dedup plan),
     and when it is at most ``local_threshold`` edges the components are
     solved driver-side with union-find — identical output, none of the
-    per-round join/checkpoint/probe jobs. Above the threshold one of two
-    distributed loops runs; a near-dup pair graph at corpus scale can be
+    per-round join/checkpoint/probe jobs. Above the threshold the
+    distributed loop runs; a near-dup pair graph at corpus scale can be
     arbitrarily large, so the distributed path is the default shape, not a
     fallback.
 
-    ``algorithm``:
-
-    - ``"auto"`` (default) — min-label propagation that ESCALATES to the
-      star algorithm when it has not converged after ``escalate_after``
-      rounds. Non-convergence after K rounds is itself the high-diameter
-      probe (a component of diameter <= K is already solved by then), so no
-      separate — and necessarily heuristic — structure sniff is needed: the
-      common dedup graph (near-cliques, diameter 2-3) pays zero extra
-      rounds, an adversarial chain graph pays K propagation rounds and then
-      contracts in O(log^2 n) star rounds on the label-quotient graph.
-    - ``"propagation"`` — per-round min-label exchange with neighbors;
-      rounds = component DIAMETER. Right for dedup graphs, whose
-      components are near-cliques through the canonical text.
-    - ``"star"`` — alternating large-star/small-star edge rewriting
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond"): each round re-points high nodes at their neighborhood
-      minimum, collapsing any component to a star in O(log^2 n) rounds
-      regardless of diameter. Same per-round join+agg plan shape.
-
-    All return byte-identical output (test-pinned on path and clique
-    graphs, where their round counts differ most).
+    The distributed loop (_cc_auto) is min-label propagation (_cc_propagation;
+    rounds = component DIAMETER, right for dedup graphs, whose components
+    are near-cliques through the canonical text) that ESCALATES to
+    alternating large-star/small-star edge rewriting (_cc_star; Kiveris et
+    al. 2014, "Connected Components in MapReduce and Beyond": O(log^2 n)
+    rounds regardless of diameter, same per-round join+agg plan shape) when
+    it has not converged after ``escalate_after`` rounds. Non-convergence
+    after K rounds is itself the high-diameter probe (a component of
+    diameter <= K is already solved by then), so no separate — and
+    necessarily heuristic — structure sniff is needed: the common dedup
+    graph (near-cliques, diameter 2-3) pays zero extra rounds, an
+    adversarial chain graph pays K propagation rounds and then contracts in
+    O(log^2 n) star rounds on the label-quotient graph. Each loop alone
+    returns the same labels as union-find (test-pinned).
     """
     pairs = pairs.localCheckpoint()
     n_edges = pairs.count()
@@ -433,14 +390,7 @@ def connected_components(
         return _cc_unionfind_local(pairs)
     a, b = pairs.columns[0], pairs.columns[1]
     undirected = pairs.select(F.col(a).alias("doc_a"), F.col(b).alias("doc_b"))
-    if algorithm == "star":
-        labels, _ = _cc_star(undirected, max_iters)
-    elif algorithm == "propagation":
-        labels, _, _ = _cc_propagation(undirected, max_iters)
-    elif algorithm == "auto":
-        labels, _ = _cc_auto(undirected, max_iters)
-    else:
-        raise ValueError(f"unknown connected_components algorithm: {algorithm!r}")
+    labels, _ = _cc_auto(undirected, max_iters)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")

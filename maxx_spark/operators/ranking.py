@@ -57,6 +57,16 @@ _MID_BITS = 33
 _MID_MASK = (1 << _MID_BITS) - 1
 
 
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int; 200 (the
+    Spark default) when the setting is not a number, e.g. a vendor
+    ``"auto"``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except (TypeError, ValueError):
+        return 200
+
+
 def range_ranked(
     df: DataFrame,
     order_cols: list,
@@ -83,10 +93,7 @@ def range_ranked(
     """
     spark = df.sparkSession
     if num_partitions is None:
-        try:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except (TypeError, ValueError):  # e.g. a vendor "auto" setting
-            num_partitions = 200
+        num_partitions = shuffle_partitions(spark)
     # r7: pin the INPUT before range partitioning — repartitionByRange
     # executes its child twice (once for the range sampler's sketch, once
     # for the exchange itself), so an expensive upstream (the quality

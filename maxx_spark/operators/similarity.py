@@ -192,7 +192,6 @@ def cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.5,
     n_blocks: int | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a < b) with
     cosine >= threshold — EXACT, via distributed blocked matrix multiply.
@@ -236,9 +235,7 @@ def cosine_near_dup_pairs(
     if n_blocks is None:
         import math
 
-        # r6 advisory: accept a caller-known row count so block sizing does
-        # not re-scan the input (one extra job per invocation at 100 TB)
-        n = embeddings.count() if n_rows is None else int(n_rows)
+        n = embeddings.count()
         head = embeddings.select(F.size("embedding").alias("d")).head()
         dim = int(head["d"]) if head else 1
         n_blocks = max(1, math.ceil(n * dim * 8 / _BLOCK_TARGET_BYTES))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from maxx_spark.operators.ranking import shuffle_partitions
+
 DEC = "decimal(18,4)"
 
 
@@ -80,9 +82,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def drop_late_events(
-    events: DataFrame, delay: str = "10 minutes", num_partitions: int | None = None
-) -> DataFrame:
+def drop_late_events(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
     """Watermark semantics expressed in batch (E2): processing order =
     event_id; watermark = max(ts) over all *previously arrived* events minus
     ``delay``; an event is late (dropped) iff ts < watermark.
@@ -95,14 +95,15 @@ def drop_late_events(
     global exclusive running max decomposes into ``greatest(max over all
     earlier CHUNKS, max over earlier rows in my chunk)`` for any chunking
     that is monotone in event_id.
-    1. Chunk id = (event_id - min) DIV width, width sized so ~num_partitions
-       chunks exist — a pure DETERMINISTIC projection, so (unlike the old
-       repartitionByRange form) there is no sampling pass to run and no
-       sampled boundary to pin with a localCheckpoint: the only
-       driver-visible state is the (min, max) bounds aggregate. Arrival
-       sequence numbers are dense by construction (they are the arrival
-       order), so equal-width chunks are balanced; an adversarially sparse
-       id space would need the old sampled-range form back.
+    1. Chunk id = (event_id - min) DIV width, width sized so about
+       ``spark.sql.shuffle.partitions`` chunks exist — a pure DETERMINISTIC
+       projection, so (unlike the old repartitionByRange form) there is no
+       sampling pass to run and no sampled boundary to pin with a
+       localCheckpoint: the only driver-visible state is the (min, max)
+       bounds aggregate. Arrival sequence numbers are dense by construction
+       (they are the arrival order), so equal-width chunks are balanced; an
+       adversarially sparse id space would need the old sampled-range form
+       back.
     2. Bounded per-chunk max(ts) rollup (map-side combined — the full
        shuffle the old form paid to range-partition before counting never
        happens), prefix-max on the driver, joined back on chunk id (bounded
@@ -111,17 +112,19 @@ def drop_late_events(
        __pid — every task sorts only its own contiguous range.
     ``greatest`` skips NULLs, so the first chunk (no prefix) and each
     chunk's first row (no local predecessor) fall out naturally.
+
+    Input contract: ``events`` must be DETERMINISTIC — it is evaluated in
+    three jobs (the (min, max) bounds, the per-chunk max rollup, the
+    output), and nothing pins it between them. An input that can yield
+    different rows on re-evaluation (``rand()``, a directory still being
+    written) must be cached or checkpointed by the caller first.
     """
     spark = events.sparkSession
-    if num_partitions is None:
-        try:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        except (TypeError, ValueError):
-            num_partitions = 200
+    n_chunks = shuffle_partitions(spark)
     bounds = events.agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi")).first()
     lo = int(bounds["lo"]) if bounds["lo"] is not None else 0
     hi = int(bounds["hi"]) if bounds["hi"] is not None else 0
-    width = max(1, (hi - lo + int(num_partitions)) // int(num_partitions))
+    width = max(1, (hi - lo + n_chunks) // n_chunks)
     arrived = events.withColumn(
         "__pid", F.expr(f"(event_id - {lo}) DIV {width}").cast("long")
     )

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from maxx_spark.operators.codeunits import with_host
+from maxx_spark.streaming.cep import _ts_ms
 
 # Clock-tick sentinel keys. Rows that carry no def/need/member payload must
 # still REACH the stateful operator (a filter between withWatermark and the
@@ -97,8 +98,7 @@ def _resolve_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     out: list[tuple] = []
     for pdf in pdfs:
         for side, path, kind, ts in zip(pdf["side"], pdf["unit_path"], pdf["kind"], pdf["warc_ts"]):
-            ts_ms = int(pd.Timestamp(ts).value // 1_000_000) if ts is not None else 0
-            max_ts = max(max_ts, ts_ms)
+            max_ts = max(max_ts, _ts_ms(ts))
             if side == "def":
                 if def_kind is None:
                     def_kind = kind
@@ -211,8 +211,7 @@ def _assemble_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
 
     for pdf in pdfs:
         for stem, kind, ts in zip(pdf["stem"], pdf["kind"], pdf["warc_ts"]):
-            ts_ms = int(pd.Timestamp(ts).value // 1_000_000) if ts is not None else 0
-            max_ts = max(max_ts, ts_ms)
+            max_ts = max(max_ts, _ts_ms(ts))
             if stem not in members:
                 members.append(stem)
             if kind == "class":

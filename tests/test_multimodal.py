@@ -87,6 +87,3 @@ def test_decode_moves_no_payload_bytes(spark):
 
     p = executed_plan(decode_media(generate_media_df(spark, 30)))
     assert "Exchange" not in p
-    # and the explicit rebalance knob still exists for skewed sources
-    p2 = executed_plan(decode_media(generate_media_df(spark, 30), repartition_to=8))
-    assert "Exchange" in p2

@@ -336,3 +336,35 @@ def test_session_paths_exchange_reuse(spark, sf_dir):
     keys = set(re.findall(r"Exchange hashpartitioning\((\w+)#", p))
     assert keys == {"user_id", "path"}, keys
     assert "TakeOrderedAndProject" in p
+
+
+def test_q44_reuses_q13_verified_pairs(spark, sf_dir, monkeypatch):
+    """Cross-query reuse (the dedup cache invariant): q44 clusters the
+    verified pair list q13 cached. The two pair plans match canonically, so
+    once q13 has run, the pairs q44 builds are already materialized and its
+    plan is a scan of the cache, not the LSH pipeline again."""
+    import __spark_entry__ as entry
+    from maxx_spark.operators import dedup as D
+    from maxx_spark.plans import executed_plan
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    lsh = D.minhash_lsh_pairs
+    built = []  # (pairs, already materialized when built)
+
+    def spy(*args, **kwargs):
+        pairs = lsh(*args, **kwargs)
+        hit = cache.lookupCachedData(pairs._jdf)
+        rdds = hit.get().cachedRepresentation().cacheBuilder() if hit.isDefined() else None
+        built.append((pairs, rdds is not None and rdds.isCachedColumnBuffersLoaded()))
+        return pairs
+
+    monkeypatch.setattr(D, "minhash_lsh_pairs", spy)
+    spark.catalog.clearCache()
+    try:
+        entry.queries()["q13_minhash_lsh"](spark, sf_dir).collect()
+        entry.queries()["q44_dedup_clusters"](spark, sf_dir)
+        (_, q13_loaded), (q44_pairs, q44_loaded) = built
+        assert not q13_loaded and q44_loaded
+        assert "InMemoryTableScan" in executed_plan(q44_pairs).splitlines()[1]
+    finally:
+        spark.catalog.clearCache()

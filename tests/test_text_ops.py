@@ -50,13 +50,16 @@ def test_connected_components_reversed_chain(spark):
 
 
 def test_connected_components_star_variant(spark):
-    """algorithm='star' (large-star/small-star) must (a) agree byte-for-byte
-    with union-find and with propagation on ordinary graphs, and (b) solve a
-    long PATH — propagation's worst case, where rounds = diameter — within a
-    round budget propagation provably blows."""
+    """The star loop (large-star/small-star) must (a) agree byte-for-byte
+    with union-find, as must propagation and the escalating auto loop, on
+    ordinary graphs, and (b) solve a long PATH — propagation's worst case,
+    where rounds = diameter — within a round budget propagation provably
+    blows."""
     import random
+    from collections import Counter
 
     from maxx_spark.operators.dedup import (
+        _cc_auto,
         _cc_propagation,
         _cc_star,
         connected_components,
@@ -72,9 +75,14 @@ def test_connected_components_star_variant(spark):
     )
     want = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
             for r in connected_components(pairs).collect()}  # union-find path
-    for algo in ("propagation", "star", "auto"):
-        got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-               for r in connected_components(pairs, local_threshold=0, algorithm=algo).collect()}
+    for algo, (out, *_) in (
+        ("propagation", _cc_propagation(pairs, max_iters=20)),
+        ("star", _cc_star(pairs, max_iters=20)),
+        ("auto", _cc_auto(pairs, max_iters=20)),
+    ):
+        labels = {r["doc_id"]: r["label"] for r in out.collect()}
+        sizes = Counter(labels.values())
+        got = {d: (lab, sizes[lab]) for d, lab in labels.items()}
         assert got == want, algo
 
     # 120-node path, min at the far end: diameter 119. In 8 rounds
@@ -374,10 +382,16 @@ def test_length_percentiles_exact(spark):
     assert (out["src1"]["n_docs"], out["src1"]["p50"], out["src1"]["p99"]) == (1, 5, 5)
 
 
-def test_dedup_df_modes_equivalent(spark):
-    """_capped_shingles df_mode='join' (the AQE-splittable default since
-    r6) must produce byte-identical q12 output to the count-window form
-    (kept for single-box squeezing)."""
+def test_ngram_jaccard_df_cap_exact(spark):
+    """q12 pairs on the df-capped shingle universe, against pairs derived
+    by hand. Word trigrams: d0 and d3 (equal texts) hold 7, d1 shares the
+    first 6 of them plus "the lazy cat", d2 and d4 share nothing (d4
+    repeats one trigram cycle 30 times: 3 distinct shingles, df 1 each).
+    The 6 common trigrams have df 3 and "the lazy dog" df 2.
+
+    max_df=3 keeps every shingle (the cap is df <= max_df): (0,1) and
+    (1,3) share 6 of 8, (0,3) all 7. max_df=2 drops the 6 df-3 trigrams,
+    leaving "the lazy dog" as d0's and d3's whole universe: J = 1/1."""
     from maxx_spark.operators.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -388,25 +402,10 @@ def test_dedup_df_modes_equivalent(spark):
         " ".join(["viral gram here"] * 30),  # repeated shingle inside one doc
     ]
     docs = _docs(spark, rows)
-    a = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3).collect())
-    b = sorted(tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3, df_mode="window").collect())
-    assert a == b and len(a) > 0
-
-
-def test_minhash_string_index_equivalent(spark, sf_dir):
-    """r7: minhash_lsh_pairs builds its hash arithmetic as SQL strings with
-    two x-derivations (pre-hashed bigint keys vs md5i over a raw STRING
-    shingle index). Both index forms must produce identical pairs — pins
-    the rarely-exercised string branch against the rewrite."""
-    from maxx_spark.operators.dedup import minhash_lsh_pairs, word_shingles
-    from maxx_spark.session import load_tables
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    idx_str = word_shingles(docs, 3)
-    assert dict(idx_str.dtypes)["shingle"] == "string"
-    base = minhash_lsh_pairs(docs, n=3)
-    via_str = minhash_lsh_pairs(docs, n=3, index=idx_str)
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, via_str.collect()))
+    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=3).collect()]
+    assert got == [(0, 1, 6, 8), (0, 3, 7, 7), (1, 3, 6, 8)]
+    got = [tuple(r) for r in ngram_jaccard_pairs(docs, max_df=2).collect()]
+    assert got == [(0, 3, 1, 1)]
 
 
 def test_drop_late_events_matches_sequential_reference(spark):
