@@ -15,4 +15,9 @@ log and per-partition lineage (see ``maxx_spark.streaming`` and
 ``maxx_spark.operators``).
 """
 
+from maxx_spark import pyworker
+
+# every process that imports the engine gets it, Spark's Python workers included
+pyworker.install()
+
 __version__ = "0.1.0"

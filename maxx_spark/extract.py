@@ -116,6 +116,7 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
     from maxx_spark.matparse.mparser import source_slice
 
     rows: list[dict] = []
+    lines = text.split("\n") if text is not None else None  # once per page
     ident = info["identifier"]
     ns = info["namespace"]
     is_cf_member = info["classfolder"] is not None and info["stem"] != info["classfolder"]
@@ -147,8 +148,8 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
                 else None
             ),
             "extracted_text": (
-                source_slice(text, unit.lineno, unit.endlineno)
-                if unit.lineno and text is not None
+                source_slice(lines, unit.lineno, unit.endlineno)
+                if unit.lineno and lines is not None
                 else text
             ),
             "is_private": info["is_private"],
@@ -197,8 +198,8 @@ def flatten_unit(unit, url: str, warc_ts, text: str, info: dict) -> list[dict]:
                 "returns": _args_list(m.returns) if m.kind == "function" else None,
                 "sections": None,
                 "extracted_text": (
-                    source_slice(text, m.lineno, m.endlineno)
-                    if m.lineno and text is not None
+                    source_slice(lines, m.lineno, m.endlineno)
+                    if m.lineno and lines is not None
                     else None
                 ),
                 "is_private": m_private,

@@ -870,8 +870,9 @@ def parse_mfile(text: str, stem: str, config: ExtractConfig | None = None) -> MU
     return MatlabFileParser(text, stem, config).parse()
 
 
-def source_slice(text: str, lineno: int, endlineno: int) -> str:
+def source_slice(lines: list[str], lineno: int, endlineno: int) -> str:
     """The reference's byte-identity invariant (objects.py:470-495):
-    lines[lineno-1:endlineno], joined and dedented."""
-    lines = text.split("\n")[lineno - 1 : endlineno]
-    return textwrap.dedent("\n".join(lines))
+    lines[lineno-1:endlineno] of the file's ``text.split("\\n")``, joined
+    and dedented. Takes the split lines so a page is split once, not once
+    per unit."""
+    return textwrap.dedent("\n".join(lines[lineno - 1 : endlineno]))

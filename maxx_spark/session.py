@@ -18,6 +18,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _identity(batches):
+    return batches
+
+
 def _warm_session(spark: SparkSession, cores: int) -> None:
     """One-time session warmup (~6 s at 4 cores, data-independent): grow
     the Python worker pool to ``cores`` in one wide Arrow stage, so worker
@@ -25,6 +29,11 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
     inside the first pandas/Arrow operator of the session (the r4 extract
     order A/B measured first-in-session runs ~2x slower from exactly this;
     bench.py warms extraction for the same reason).
+
+    The stage runs the module-level ``_identity``, which cloudpickle ships
+    by reference, so every pooled worker imports ``maxx_spark`` and installs
+    ``pyworker``'s zip-directory fix before the first real task (a lambda
+    would ship by value and import nothing).
 
     Synthetic (spark.range): it touches no input data and caches nothing.
     A failure is logged, never raised — warmup must not block a session."""
@@ -34,7 +43,7 @@ def _warm_session(spark: SparkSession, cores: int) -> None:
         base = spark.range(cores * 512).repartition(cores)
         # mapInPandas (not mapInArrow) so every worker also imports pandas
         # here, not inside the first real pandas-UDF query
-        base.mapInPandas(lambda it: it, "id long").agg(F.count(F.lit(1))).collect()
+        base.mapInPandas(_identity, "id long").agg(F.count(F.lit(1))).collect()
     except Exception:
         logging.getLogger(__name__).warning("session warmup failed", exc_info=True)
 

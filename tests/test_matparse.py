@@ -290,7 +290,7 @@ def test_source_slice_byte_identity(ref_files):
             continue
         if u.lineno is None:
             continue
-        got = source_slice(text, u.lineno, u.endlineno)
+        got = source_slice(text.split("\n"), u.lineno, u.endlineno)
         expected = textwrap.dedent(
             "\n".join(text.split("\n")[u.lineno - 1 : u.endlineno])
         )
